@@ -56,7 +56,7 @@ from pyspark.sql.types import (
 from ..kernels.cuckoo import BloomFilter, CuckooFilter
 from ..kernels.filters import filter_item, initialize_filters
 from ..kernels.robots import parse_robots
-from .fetchers import FetchError
+from .fetchers import FetchError, polite_fetch
 from ..kernels.scrape import scrape_page
 from .pipeline import _field_columns, _arrow_schema, item_spark_schema
 from .store import SnapshotStore
@@ -76,8 +76,28 @@ ROBOTS_DISALLOW_ALL = b"User-agent: *\nDisallow: /\n"
 # are cached (2xx bodies and 4xx allow-all); 5xx/network-failure
 # disallow-all stays per-round so an unreachable host is re-probed the
 # next round, exactly as before.
+#
+# The fetch kernel is a closure, which cloudpickle ships BY VALUE together
+# with a copy of every module global it names; a dict named directly in
+# the closure would be a fresh empty copy in every task. The kernel
+# therefore reaches the cache only through these module-level functions,
+# which pickle by reference and resolve to the worker's own module.
 _ROBOTS_TTL_SECS = 24 * 3600.0
 _LIVE_ROBOTS_CACHE = {}  # (scheme, netloc, user_agent) -> (expiry, rules)
+
+
+def _live_robots_get(key):
+    """Cached robots rules for ``key``, or None when absent/expired."""
+    hit = _LIVE_ROBOTS_CACHE.get(key)
+    if hit is not None and hit[0] > time.monotonic():
+        return hit[1]
+    return None
+
+
+def _live_robots_put(key, rules):
+    if len(_LIVE_ROBOTS_CACHE) > 100_000:
+        _LIVE_ROBOTS_CACHE.clear()
+    _LIVE_ROBOTS_CACHE[key] = (time.monotonic() + _ROBOTS_TTL_SECS, rules)
 
 FRONTIER_SCHEMA = StructType([
     StructField("url", StringType()),
@@ -272,6 +292,12 @@ class CrawlEngine:
         self.salt_threshold = salt_threshold
         self.salt_factor = salt_factor
         self.now = now or datetime.now(timezone.utc)
+        # fetch_partitions is an UPPER BOUND on the fetch/extract stage's
+        # width: a round runs at most one wave of task slots
+        # (defaultParallelism), and fewer tasks when it is small, because
+        # each Python task costs ~100 ms of worker set-up before its
+        # kernel runs. It also caps the bucketed dequeue and the
+        # slab-aligned seen stages.
         self.fetch_partitions = fetch_partitions or max(
             4, spark.sparkContext.defaultParallelism)
         # seen-set scale knobs: above slab_driver_threshold new urls per
@@ -498,19 +524,16 @@ class CrawlEngine:
             {"round": round_no})
         return None
 
-    def _commit_new_urls_driver(self, outlinks, round_no):
-        """Small-round new-url commit: one Spark job aggregates the
-        outlinks and collects them (hash/host/canonicalization computed
-        by the SAME Spark expressions as the distributed path); the
-        Bloom+cuckoo membership flag, the exact seen confirm and the
-        frontier/seen/slab appends then run driver-side. Returns n_new.
-        Gated by the caller on broadcast seen mode + seen-table bytes +
-        round size."""
+    def _commit_new_urls_driver(self, pdf, round_no):
+        """Small-round new-url commit from the aggregated candidate
+        frame (FRONTIER_SCHEMA columns; hash/host/canonicalization were
+        computed by the SAME Spark expressions as the distributed path):
+        the Bloom+cuckoo membership flag, the exact seen confirm and the
+        frontier/seen/slab appends run driver-side, with no Spark job.
+        Returns n_new. Gated by the caller on broadcast seen mode +
+        seen-table bytes + round size."""
         import zlib
 
-        import pyarrow.parquet as pq
-
-        pdf = outlinks.toPandas()
         if pdf.empty:
             for t in (self.t_frontier, self.t_seen, self.t_slabs):
                 t.commit_meta({"round": round_no})
@@ -684,12 +707,17 @@ class CrawlEngine:
         so fetch_seq — and the crawl digest — are byte-identical."""
         import pyarrow.compute as pc
 
-        pdf = (coll.filter(pc.equal(coll["_kind"], "fetch"))
-               .select(["_page_url", "_url_hash", "_host", "_fetch_ts",
-                        "_status", "_n_items", "_n_errors"])
-               .rename_columns(["url", "url_hash", "host", "fetch_ts",
-                                "status", "n_items", "n_errors"])
-               .to_pandas())
+        ft = (coll.filter(pc.equal(coll["_kind"], "fetch"))
+              .select(["_page_url", "_url_hash", "_host", "_fetch_ts",
+                       "_status", "_n_items", "_n_errors"])
+              .rename_columns(["url", "url_hash", "host", "fetch_ts",
+                               "status", "n_items", "n_errors"]))
+        # the byte-order sort key below and every dequeue path assume
+        # it; _with_outlink_keys keeps hostless urls out of the frontier
+        if ft["url"].null_count or ft["host"].null_count:
+            raise AssertionError(
+                f"round {round_no}: fetched rows with a NULL url or host")
+        pdf = ft.to_pandas()
         pdf["round"] = np.int64(round_no)
 
         def _key(s):
@@ -698,20 +726,65 @@ class CrawlEngine:
         return pdf.sort_values(["fetch_ts", "host", "url"], key=_key,
                                kind="mergesort", ignore_index=True)
 
-    def _outlink_df_from_arrow(self, coll):
-        """Rebuild the tiny outlink relation from the collected kernel
-        output as a LOCAL-relation DataFrame (no kernel lineage, so the
-        new-url job never recomputes the fetch/extract pass). The
-        hash / host / canonicalization stay Spark expressions downstream
-        — no semantic re-implementation."""
+    def _with_outlink_keys(self, kernel_df):
+        """The ONE outlink → frontier-row key mapping, shared by the
+        single-collect and distributed paths: the raw ``_outlink`` is
+        replaced by the url through the configured canonicalization
+        (``_o_url``), and its JVM xxhash64 (``_o_hash``) and host
+        (``_o_host``: lower() matches url_host(), whose
+        urlsplit().hostname is lowercased — one host identity per site
+        everywhere) are added. Outlinks without a host (``http:///x``,
+        or a scheme with no authority such as ``mailto:``) are dropped
+        here: the pandas and Window dequeues would disagree on a NULL
+        host. Rows of other kinds pass through with NULL keys."""
+        url = F.col("_outlink")
+        if self.canonicalize_outlinks:
+            url = self._canon_expr(url)
+        keyed = (kernel_df.withColumn("_o_url", url).drop("_outlink")
+                 .withColumn("_o_hash", F.xxhash64("_o_url"))
+                 .withColumn("_o_host",
+                             F.lower(F.expr("parse_url(_o_url, 'HOST')"))))
+        return keyed.filter((F.col("_kind") != "outlink")
+                            | (F.col("_o_url").isNotNull()
+                               & F.col("_o_host").isNotNull()))
+
+    def _outlinks_df(self, outlink_rows, round_no):
+        """Distributed new-url candidates: one frontier row per distinct
+        outlink url, at its minimum depth and page_no."""
+        return (self._with_outlink_keys(outlink_rows)
+                .groupBy(F.col("_o_url").alias("url"),
+                         F.col("_o_hash").alias("url_hash"),
+                         F.col("_o_host").alias("host"))
+                .agg(F.min(F.col("_depth") + 1).alias("depth"),
+                     F.min("_page_no").alias("page_no"))
+                .withColumn("priority", F.col("depth").cast("double"))
+                .withColumn("discovered_round",
+                            F.lit(round_no).cast("long"))
+                .select(*[f.name for f in FRONTIER_SCHEMA.fields]))
+
+    def _outlinks_from_arrow(self, coll, round_no):
+        """The same candidates as _outlinks_df, aggregated in pyarrow
+        from the collected kernel output (keys already computed by
+        _with_outlink_keys in the kernel job): a pandas frame in
+        FRONTIER_SCHEMA column order, no Spark job."""
         import pyarrow.compute as pc
 
-        ot = (coll.filter(pc.equal(coll["_kind"], "outlink"))
-              .select(["_outlink", "_depth", "_page_no"]))
-        schema = StructType([StructField("_outlink", StringType()),
-                             StructField("_depth", LongType()),
-                             StructField("_page_no", LongType())])
-        return self.spark.createDataFrame(ot.to_pandas(), schema)
+        ot = coll.filter(pc.equal(coll["_kind"], "outlink"))
+        agg = (pa.table({"url": ot["_o_url"], "url_hash": ot["_o_hash"],
+                         "host": ot["_o_host"],
+                         "depth": pc.add(ot["_depth"], 1),
+                         "page_no": ot["_page_no"]})
+               .group_by(["url", "url_hash", "host"])
+               .aggregate([("depth", "min"), ("page_no", "min")]))
+        depth = agg["depth_min"]
+        return pa.table({
+            "url": agg["url"], "url_hash": agg["url_hash"],
+            "host": agg["host"], "priority": pc.cast(depth, pa.float64()),
+            "depth": depth,
+            "discovered_round": pa.array(
+                np.full(agg.num_rows, round_no, dtype=np.int64)),
+            "page_no": agg["page_no_min"]}) \
+            .cast(self._FRONTIER_ARROW).to_pandas()
 
     def _buckets_complete(self):
         """True when EVERY live frontier/fetched file has a bucket
@@ -1718,17 +1791,22 @@ class CrawlEngine:
                 dbg.coalesce(max(1, n_dequeued // 50_000 + 1)),
                 {"round": round_no})
 
+        # fetch/extract width: at most one wave of task slots (see
+        # fetch_partitions in __init__), fewer for a small round
+        n_fetch_parts = max(1, min(self.fetch_partitions,
+                                   spark.sparkContext.defaultParallelism,
+                                   (n_dequeued + 15) // 16))
         # politeness schedule: deterministic virtual clock per host —
         # computed with window functions (rank within host by priority,url)
         # so it is independent of physical partitioning. Computed on the
-        # DEQUEUED rows BEFORE html is attached: the window's exchange
-        # then moves only (url, host, priority, ...) — not page payloads.
-        # (Previously it ran after the pages join, so every html byte
-        # crossed one extra shuffle; at the 100 TB design point that is
-        # a full corpus pass over the network per round.)
+        # DEQUEUED rows BEFORE html is attached: the round's host
+        # exchange moves only (url, host, priority, ...) — not page
+        # payloads — and, without hot hosts, it is also the fetch
+        # stage's partitioning: one exchange per round.
         wseq = Window.partitionBy("host").orderBy("priority", "url")
-        work = dequeued.withColumn("_host_seq",
-                                   F.row_number().over(wseq).cast("long"))
+        work = (dequeued.repartition(n_fetch_parts, "host")
+                .withColumn("_host_seq",
+                            F.row_number().over(wseq).cast("long")))
 
         if self.pages is not None:
             robots_df = self._robots_df()
@@ -1742,12 +1820,18 @@ class CrawlEngine:
                     .withColumn("_html", F.lit(None).cast("binary"))
                     .withColumn("_robots", F.lit(None).cast("binary")))
 
-        salt_factor = self.salt_factor
-        hot = F.col("host").isin(list(hot_hosts)) if hot_hosts else F.lit(False)
-        work = work.withColumn(
-            "_salt",
-            F.when(hot, F.pmod(F.xxhash64("url"), F.lit(salt_factor)))
-            .otherwise(F.lit(0)))
+        # the fetch stage's host-locality (politeness needs nothing
+        # more), stated after the joins so it holds whatever join the
+        # planner picks; without hot hosts the planner drops it as a
+        # repeat of the first exchange. Hot hosts spread over salt
+        # sub-partitions AFTER their politeness sequence is fixed.
+        keys = [F.col("host")]
+        if hot_hosts:
+            keys.append(F.when(F.col("host").isin(list(hot_hosts)),
+                               F.pmod(F.xxhash64("url"),
+                                      F.lit(self.salt_factor)))
+                        .otherwise(F.lit(0)))
+        work = work.repartition(n_fetch_parts, *keys)
 
         scraper_factory = self.scraper_factory
         user_agent = self.user_agent
@@ -1764,18 +1848,10 @@ class CrawlEngine:
             scrapers = {}
             robots_cache = {}
             fetcher = live_factory() if live_factory is not None else None
-            last_at = {}  # host -> monotonic time of last live request
-
-            def polite_get(host, u, delay):
-                # wall-clock politeness: the host lives in THIS partition
-                # (host-hash partitioning), so a local sleep enforces the
-                # crawl-delay budget exactly
-                wait = last_at.get(host, float("-inf")) + delay \
-                    - time.monotonic()
-                if wait > 0:
-                    time.sleep(wait)
-                last_at[host] = time.monotonic()
-                return fetcher.fetch(u)
+            # wall-clock politeness: the host lives in THIS partition
+            # (host-hash partitioning), so local sleeps enforce the
+            # crawl-delay budget exactly
+            last_at = {}  # host -> monotonic time its last response returned
 
             for batch in batches:
                 d = batch.to_pydict()
@@ -1795,15 +1871,14 @@ class CrawlEngine:
                             sp = urlsplit(url)
                             ck = (sp.scheme or "https", sp.netloc,
                                   user_agent)
-                            hit = _LIVE_ROBOTS_CACHE.get(ck)
-                            if hit is not None and \
-                                    hit[0] > time.monotonic():
-                                robots_cache[host] = hit[1]
+                            hit = _live_robots_get(ck)
+                            if hit is not None:
+                                robots_cache[host] = hit
                             else:
                                 cacheable = True
                                 try:
-                                    rb = polite_get(
-                                        host,
+                                    rb = polite_fetch(
+                                        fetcher, last_at, host,
                                         f"{sp.scheme or 'https'}://"
                                         f"{sp.netloc}/robots.txt",
                                         0.0).encode()
@@ -1826,11 +1901,7 @@ class CrawlEngine:
                                 rules = parse_robots(rb, user_agent)
                                 robots_cache[host] = rules
                                 if cacheable:
-                                    if len(_LIVE_ROBOTS_CACHE) > 100_000:
-                                        _LIVE_ROBOTS_CACHE.clear()
-                                    _LIVE_ROBOTS_CACHE[ck] = (
-                                        time.monotonic()
-                                        + _ROBOTS_TTL_SECS, rules)
+                                    _live_robots_put(ck, rules)
                         else:
                             robots_cache[host] = parse_robots(
                                 rb if rb is not None else b"",
@@ -1846,7 +1917,8 @@ class CrawlEngine:
                     html = d["_html"][r]
                     if html is None and fetcher is not None:
                         try:
-                            html = polite_get(host, url, delay)
+                            html = polite_fetch(fetcher, last_at, host,
+                                                url, delay)
                         except Exception:
                             html = None
                     if html is None:
@@ -1891,34 +1963,27 @@ class CrawlEngine:
                 if rows:
                     yield _crawl_batch(rows, arrow_out)
 
-        # partition count adapts to the round size (a 700-url round must
-        # not pay 64 task launches); politeness only needs host-locality,
-        # which hash-partitioning on (host, _salt) gives at any width
-        n_fetch_parts = max(1, min(self.fetch_partitions,
-                                   (n_dequeued + 15) // 16))
-        kernel = (work.repartition(n_fetch_parts, "host", "_salt")
-                  .sortWithinPartitions("host", "priority", "url")
+        kernel = (work.sortWithinPartitions("host", "priority", "url")
                   .mapInArrow(fetch_extract, out_schema))
-        out_coalesce = max(1, min(n_fetch_parts, n_dequeued // 50_000 + 1))
         small_round = n_dequeued <= self.slab_driver_threshold
         # SMALL-ROUND SINGLE-COLLECT: below the same driver-
         # materialization bound the seen set uses, ONE job runs the
         # fetch/extract kernel and collects its (html-free) output as
-        # Arrow — the JVM xxhash64 rides along as a column so no hash is
-        # ever recomputed off-JVM. Items, fetched (+ fetch_seq), host
-        # stats and the round metrics all derive driver-side from that
-        # table; the outlink rows are re-lifted as a LOCAL relation so
-        # the new-url job (Spark expressions) never re-runs the kernel.
-        # Replaces three jobs (items append, fetched collect, outlink
-        # collect-from-cache) with one collect + one local-relation job,
-        # and drops the result cache entirely. retain_html rounds keep
-        # the distributed path (page payloads must not be collected).
+        # Arrow — the JVM xxhash64 of each page and the outlink columns
+        # (canonical url, its xxhash64, its host) ride along, so no hash
+        # or url rule is ever re-implemented off-JVM. Items, fetched
+        # (+ fetch_seq), host stats, the round metrics and the
+        # aggregated new-url candidates all derive driver-side from that
+        # table: no result cache, no further Spark job. retain_html
+        # rounds keep the distributed path (page payloads must not be
+        # collected).
         driver_commit = small_round and not self._retain_html
+        out_pdf = None  # aggregated outlink frontier rows (driver path)
         if driver_commit:
             started = datetime.now(timezone.utc)
-            coll = (kernel
-                    .withColumn("_url_hash", F.xxhash64("_page_url"))
-                    .toArrow())
+            coll = self._with_outlink_keys(
+                kernel.withColumn("_url_hash", F.xxhash64("_page_url"))
+            ).toArrow()
             if deq_cached:
                 dequeued.unpersist()
             self._commit_items_driver(coll, round_no, fcols)
@@ -1931,8 +1996,10 @@ class CrawlEngine:
                 self._commit_host_stats_driver(fpdf, round_no)
                 self._mark("host_stats")
             result = None
-            outlink_rows = self._outlink_df_from_arrow(coll)
+            out_pdf = self._outlinks_from_arrow(coll, round_no)
         else:
+            out_coalesce = max(1, min(n_fetch_parts,
+                                      n_dequeued // 50_000 + 1))
             result = kernel.cache()
             # first consumer (items append) fills the result cache; only
             # THEN is the dequeue cache safe to drop (result's lineage
@@ -2072,43 +2139,31 @@ class CrawlEngine:
                 seq_sorted.unpersist()
             if deq_cached:
                 dequeued.unpersist()
-            outlink_rows = result.filter("_kind = 'outlink'").select(
-                "_outlink", "_depth", "_page_no")
+            outlinks = self._outlinks_df(
+                result.filter("_kind = 'outlink'"), round_no)
 
         # --- outlinks → seen-set → new frontier rows
-        out_url = F.col("_outlink")
-        if self.canonicalize_outlinks:
-            out_url = self._canon_expr(out_url)
-        outlinks = (outlink_rows
-                    .select(out_url.alias("url"),
-                            (F.col("_depth") + 1).alias("depth"),
-                            F.col("_page_no").alias("page_no"))
-                    .groupBy("url").agg(F.min("depth").alias("depth"),
-                                        F.min("page_no").alias("page_no"))
-                    .withColumn("url_hash", F.xxhash64("url"))
-                    # lower() matches url_host() (urlsplit().hostname is
-                    # lowercased) — one host identity per site everywhere
-                    .withColumn("host",
-                                F.lower(F.expr("parse_url(url, 'HOST')")))
-                    .withColumn("priority", F.col("depth").cast("double"))
-                    .withColumn("discovered_round",
-                                F.lit(round_no).cast("long"))
-                    .select(*[f.name for f in FRONTIER_SCHEMA.fields]))
         if (small_round
                 and not (self._seen_partitioned()
                          and self.t_slabs.exists())
                 and self._files_bytes(self.t_seen)
                 <= self.dequeue_driver_bytes):
-            # SMALL-ROUND DRIVER COMMIT: ONE job computes the aggregated
-            # outlinks (url hash / host / optional canonicalization stay
-            # Spark expressions — no semantic re-implementation) and
-            # collects them; the Bloom+cuckoo flag (the same numpy code
-            # the executor kernel runs), the exact seen confirm (url
-            # membership over a bytes-gated pyarrow read — stricter-
-            # equivalent to the [url_hash, url] anti-join) and the
-            # frontier/seen/slab commits all run driver-side.
-            n_new = self._commit_new_urls_driver(outlinks, round_no)
+            # SMALL-ROUND DRIVER COMMIT: the aggregated outlinks are
+            # already in hand (single-collect rounds) or collected by
+            # one job (retain_html rounds); the Bloom+cuckoo flag (the
+            # same numpy code the executor kernel runs), the exact seen
+            # confirm (url membership over a bytes-gated pyarrow read —
+            # stricter-equivalent to the [url_hash, url] anti-join) and
+            # the frontier/seen/slab commits all run driver-side.
+            if out_pdf is None:
+                out_pdf = outlinks.toPandas()
+            n_new = self._commit_new_urls_driver(out_pdf, round_no)
         else:
+            if out_pdf is not None:
+                # a small round the seen gate refuses: the aggregated
+                # rows go to the distributed seen test as a LOCAL
+                # relation (no kernel lineage to recompute)
+                outlinks = spark.createDataFrame(out_pdf, FRONTIER_SCHEMA)
             # WRITE-FIRST commit: the new-url set is appended straight
             # to the frontier (ONE job — no count() pass, no cache);
             # n_new comes from the written parquet footers, and the seen

@@ -214,6 +214,24 @@ def new_fetcher(fetcher_config):
     raise ValueError(f"fetcher type '{ftype}' does not exist")
 
 
+def polite_fetch(fetcher, last_at, host, url, delay):
+    """One politely-paced GET: wait until ``delay`` seconds have passed
+    since the previous request to ``host`` RETURNED, then fetch. The
+    clock restarts when the response (or error) comes back, not when
+    the request is issued, so lazy session set-up, connection set-up and
+    server time all fall inside the previous request's window and two
+    requests never reach the server less than ``delay`` apart.
+    ``last_at`` maps host -> monotonic time the last response returned;
+    it is updated even when the fetch raises."""
+    deadline = last_at.get(host, float("-inf")) + delay
+    while (wait := deadline - time.monotonic()) > 0:
+        time.sleep(wait)
+    try:
+        return fetcher.fetch(url)
+    finally:
+        last_at[host] = time.monotonic()
+
+
 def fetch_partition(rows, fetcher, default_delay: float = 0.0):
     """Live-mode partition fetch loop: rows of (url, host, crawl_delay);
     sleeps enforce politeness because host-hash partitioning guarantees
@@ -221,12 +239,7 @@ def fetch_partition(rows, fetcher, default_delay: float = 0.0):
     last_at = {}
     for url, host, delay in rows:
         d = delay if delay is not None else default_delay
-        now = time.monotonic()
-        wait = last_at.get(host, -1e18) + d - now
-        if wait > 0:
-            time.sleep(wait)
-        last_at[host] = time.monotonic()
         try:
-            yield url, fetcher.fetch(url), None
+            yield url, polite_fetch(fetcher, last_at, host, url, d), None
         except Exception as e:  # per-scraper isolation (main.go:198-202)
             yield url, None, str(e)

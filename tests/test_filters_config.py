@@ -213,3 +213,48 @@ def test_multiple_globals_error(tmp_path):
 def test_nonexistent_path_error():
     with pytest.raises(ConfigError):
         load_config("/nonexistent/path/config.yml")
+
+
+def _inline_yaml_configs():
+    """Every YAML config literal in the package (host templates filled
+    in), keyed by file:line."""
+    import ast
+    import pathlib
+
+    import goskyr_spark
+    from goskyr_spark.synth import EVENT_SCRAPER_SUBPAGE_YAML
+
+    root = pathlib.Path(goskyr_spark.__file__).parent
+    out = {}
+    for path in sorted(root.rglob("*.py")):
+        for node in ast.walk(ast.parse(path.read_text())):
+            if (isinstance(node, ast.Constant)
+                    and isinstance(node.value, str)
+                    and "\nscrapers:\n" in node.value):
+                out[f"{path.name}:{node.lineno}"] = node.value
+    out["synth.EVENT_SCRAPER_SUBPAGE_YAML"] = EVENT_SCRAPER_SUBPAGE_YAML
+    return {k: v.format(host="host0001.test") if "{host}" in v else v
+            for k, v in out.items()}
+
+
+def test_libyaml_loader_matches_safe_loader():
+    """The C loader the config parser prefers builds exactly what the
+    pure-Python SafeLoader builds, for every inline config in the
+    package."""
+    import yaml
+
+    from goskyr_spark import config
+    from goskyr_spark.config import ScraperConfig
+
+    if not yaml.__with_libyaml__:
+        assert config._YAML_LOADER is yaml.SafeLoader
+        pytest.skip("PyYAML built without libyaml")
+    assert config._YAML_LOADER is yaml.CSafeLoader
+    configs = _inline_yaml_configs()
+    assert len(configs) >= 10
+    for where, text in configs.items():
+        py = yaml.load(text, Loader=yaml.SafeLoader)
+        c = yaml.load(text, Loader=yaml.CSafeLoader)
+        assert c == py, where
+        assert ScraperConfig.from_dict(c) == ScraperConfig.from_dict(py), \
+            where

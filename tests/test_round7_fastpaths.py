@@ -6,6 +6,7 @@ match their reference formulations exactly."""
 import hashlib
 import shutil
 import tempfile
+import uuid
 from datetime import datetime, timezone
 
 import pytest
@@ -49,19 +50,26 @@ def _digest(eng, spark):
     return h.hexdigest()
 
 
-def _run(spark, pages, spec, **kw):
+def _seeds(spec):
+    return [f"https://{host_name(h)}/list/1" for h in range(spec.n_hosts)]
+
+
+def _run(spark, pages, seeds, scraper=event_scraper, driver_dequeue=True,
+         **kw):
     wd = tempfile.mkdtemp(prefix="r7fp-")
     try:
-        eng = CrawlEngine(spark, wd, pages, event_scraper,
-                          [f"https://{host_name(h)}/list/1"
-                           for h in range(spec.n_hosts)],
+        eng = CrawlEngine(spark, wd, pages, scraper, seeds,
                           now=NOW, fetch_partitions=4,
                           round_budget=10_000, **kw)
+        if not driver_dequeue:
+            eng.dequeue_driver_bytes = 0
         summaries = eng.run(max_rounds=30)
         # ALL item columns (incl. timestamp fields): the driver-side
         # items write must be value-identical to the Spark write path
         items = sorted(tuple(r) for r in eng.items_final().collect())
-        return _digest(eng, spark), summaries, items
+        frontier = [tuple(r) for r in eng.t_frontier.read(spark)
+                    .select("url", "host").collect()]
+        return _digest(eng, spark), summaries, items, frontier
     finally:
         shutil.rmtree(wd, ignore_errors=True)
 
@@ -73,34 +81,130 @@ def _force_distributed(eng_kw):
     return dict(eng_kw, slab_driver_threshold=0)
 
 
-@pytest.mark.parametrize("mode_kw", [
-    {},                            # window dequeue
-    {"frontier_buckets": 8},       # bucketed dequeue
-    {"adaptive_priority": True},   # adaptive window dequeue
-])
-def test_driver_fast_paths_match_distributed(spark, pages, spec, mode_kw):
-    fast_digest, fast_sum, fast_items = _run(spark, pages, spec, **mode_kw)
-    slow_digest, slow_sum, slow_items = _run(
-        spark, pages, spec, **_force_distributed(mode_kw))
-    # also force the distributed dequeue specifically
-    wd = tempfile.mkdtemp(prefix="r7fp-")
-    try:
-        eng = CrawlEngine(spark, wd, pages, event_scraper,
-                          [f"https://{host_name(h)}/list/1"
-                           for h in range(spec.n_hosts)],
-                          now=NOW, fetch_partitions=4,
-                          round_budget=10_000, **mode_kw)
-        eng.dequeue_driver_bytes = 0
-        eng.run(max_rounds=30)
-        nodeq_digest = _digest(eng, spark)
-    finally:
-        shutil.rmtree(wd, ignore_errors=True)
+def _assert_paths_agree(spark, pages, seeds, scraper=event_scraper,
+                        **mode_kw):
+    """Driver fast paths ≡ distributed paths ≡ distributed dequeue."""
+    fast_digest, fast_sum, fast_items, fast_fr = _run(
+        spark, pages, seeds, scraper, **mode_kw)
+    slow_digest, slow_sum, slow_items, _ = _run(
+        spark, pages, seeds, scraper, **_force_distributed(mode_kw))
+    nodeq_digest, _, _, _ = _run(spark, pages, seeds, scraper,
+                                 driver_dequeue=False, **mode_kw)
     assert fast_digest == slow_digest == nodeq_digest
     assert fast_items == slow_items
     assert [s.get("n_dequeued") for s in fast_sum] == \
         [s.get("n_dequeued") for s in slow_sum]
     assert [s.get("n_items") for s in fast_sum] == \
         [s.get("n_items") for s in slow_sum]
+    return fast_fr
+
+
+@pytest.mark.parametrize("mode_kw", [
+    {},                            # window dequeue
+    {"frontier_buckets": 8},       # bucketed dequeue
+    {"adaptive_priority": True},   # adaptive window dequeue
+    # outlink canonicalization runs inside the single-collect kernel job
+    # on the fast path and after the outlink aggregation's input on the
+    # distributed one
+    {"canonicalize_outlinks": True},
+    {"canonicalize_outlinks": "full"},
+])
+def test_driver_fast_paths_match_distributed(spark, pages, spec, mode_kw):
+    _assert_paths_agree(spark, pages, _seeds(spec), **mode_kw)
+
+
+HOSTLESS_CFG = """
+scrapers:
+  - name: hostless
+    url: x
+    item: div.e
+    fields:
+      - name: t
+        location: {selector: span.t}
+      - name: link
+        type: url
+        can_be_empty: true
+        location: {selector: a.more, attr: href}
+"""
+
+# hrefs the URL join keeps absolute but whose parse_url HOST is NULL
+HOSTLESS_HREFS = ["http:///x", "https:///y/z"]
+
+
+def test_hostless_outlinks_fast_matches_distributed(spark):
+    """Outlinks without a host never reach the frontier, so every dequeue
+    path schedules the same rows (the pandas dequeue would drop a NULL
+    host that the Spark Window dequeues)."""
+    from goskyr_spark.config import loads_config
+
+    def item(t, href):
+        return (f'<div class="e"><span class="t">{t}</span>'
+                f'<a class="more" href="{href}">m</a></div>')
+
+    hrefs = ["/detail/1", "mailto:m@a.test"] + HOSTLESS_HREFS
+    rows = [("https://a.test/robots.txt", b"User-agent: *\nAllow: /\n"),
+            ("https://a.test/list/1",
+             "".join(item(f"i{i}", h) for i, h in enumerate(hrefs))
+             .encode()),
+            ("https://a.test/detail/1", item("d1", "http:///x").encode())]
+    pages = spark.createDataFrame(rows, "url string, html binary")
+    frontier = _assert_paths_agree(
+        spark, pages, ["https://a.test/list/1"],
+        lambda host: loads_config(HOSTLESS_CFG).scrapers[0])
+    assert all(url and host for url, host in frontier), frontier
+    assert {u for u, _ in frontier} == {
+        "https://a.test/list/1", "https://a.test/detail/1",
+        "https://a.test/list/mailto:m@a.test"}
+
+
+def test_small_round_job_budget(spark):
+    """A small mock round runs its fetch stage in at most one wave of
+    task slots, whatever fetch_partitions says, and commits its new urls
+    without a Spark job."""
+    sc = spark.sparkContext
+    slots = sc.defaultParallelism
+    spec = SynthSpec(n_hosts=40, pages_per_host=2, items_per_page=3,
+                     hot_hosts=0, hot_factor=1)
+    pages = synth_pages_df(spark, spec, include_fixtures=False).cache()
+    pages.count()
+    wd = tempfile.mkdtemp(prefix="r7fp-")
+    tag = f"jobbudget-{uuid.uuid4().hex[:8]}"
+    try:
+        eng = CrawlEngine(spark, wd, pages, event_scraper, _seeds(spec),
+                          now=NOW, fetch_partitions=64, round_budget=10_000)
+        eng.bootstrap()
+        eng.run_round(0)
+        commit = eng._commit_new_urls_driver
+        calls = []
+
+        def commit_in_own_group(pdf, round_no):
+            calls.append(len(pdf))
+            sc.setJobGroup(f"{tag}-new-urls", "new-url commit")
+            try:
+                return commit(pdf, round_no)
+            finally:
+                sc.setJobGroup(f"{tag}-round", "round")
+
+        eng._commit_new_urls_driver = commit_in_own_group
+        sc.setJobGroup(f"{tag}-round", "round")
+        try:
+            summary = eng.run_round(1)
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+            sc.setLocalProperty("spark.job.description", None)
+    finally:
+        shutil.rmtree(wd, ignore_errors=True)
+        pages.unpersist()
+    n = summary["n_dequeued"]
+    assert calls and calls[0] > 0  # the driver commit ran, on real rows
+    st = sc.statusTracker()
+    assert list(st.getJobIdsForGroup(f"{tag}-new-urls")) == []
+    # the round's last job is the single-collect kernel job; its result
+    # stage is the fetch/extract stage
+    last = st.getJobInfo(max(st.getJobIdsForGroup(f"{tag}-round")))
+    fetch_tasks = st.getStageInfo(max(last.stageIds)).numTasks
+    assert fetch_tasks <= slots
+    assert fetch_tasks == min(slots, (n + 15) // 16)
 
 
 def test_append_counted_empty_append_is_meta_only(spark, tmp_path):
